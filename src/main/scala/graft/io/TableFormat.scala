@@ -147,9 +147,11 @@ object TableFormat {
       if (subdirs.isEmpty) return None
       // footers are read concurrently (Iceberg reads manifests the same
       // way): one ~ms metadata read per file is latency-bound, and a
-      // 32-partition commit pays 32 of them
+      // 32-partition commit pays 32 of them. They run on their own bounded
+      // pool with a finite wait: a stalled store then costs the scan path,
+      // never a hung commit or a starved global execution context.
       import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
+      implicit val ec: scala.concurrent.ExecutionContext = footerPool
       Some(Await.result(Future.traverse(subdirs) { sub => Future {
         val pv = decodePartValue(sub.getFileName.toString.stripPrefix(s"$pcol="), pdt)
         var rows = 0L
@@ -198,11 +200,40 @@ object TableFormat {
         }
         PartStats(pv, rows,
           statsCols.map(c => c -> ((mins.get(c), maxs.get(c)))).toMap)
-      }}, scala.concurrent.duration.Duration.Inf))
+      }}, footerTimeout))
     } catch {
       case _: Unavailable => None
-      case scala.util.control.NonFatal(_) => None // unreadable footer → scan path
+      // unreadable footer or timed-out wait → scan path
+      case scala.util.control.NonFatal(_) => None
     }
+  }
+
+  /** The footer reader's pool: a few daemon threads, created on the first
+    * commit that reads footers (metadata reads are latency-bound, so a
+    * small fixed width already overlaps them). */
+  private lazy val footerPool: scala.concurrent.ExecutionContext = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    scala.concurrent.ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
+        val t = new Thread(r, s"graft-footer-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }))
+  }
+
+  /** How long a commit waits for its footer reads before it falls back to
+    * [[scanPartStats]]. A healthy read of one commit's footers takes
+    * milliseconds. */
+  @volatile private var footerTimeout: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.FiniteDuration(60, "seconds")
+
+  /** Run `body` with a different footer-read wait (tests force the
+    * timeout fallback with a zero wait). */
+  private[graft] def withFooterTimeout[T](
+      wait: scala.concurrent.duration.FiniteDuration)(body: => T): T = {
+    val prev = footerTimeout
+    footerTimeout = wait
+    try body finally footerTimeout = prev
   }
 
   /** Scan-based fallback for [[footerPartStats]]: one column-pruned Spark
@@ -439,27 +470,32 @@ object TableFormat {
           case _ => false
         }
         if (!hasCol) None
-        else f.get("partitions_added") match {
-          case Some(JArr(parts)) =>
-            val pcol = f.get("partition_col") match {
-              case Some(JStr(c)) => c
-              case _ => return None
-            }
-            Some(parts.toSeq.collect { case JObj(p) =>
-              val pv = p.get(pcol).map(scalar).orNull
-              val (lo, hi) = p.get("stats") match {
-                case Some(JObj(st)) => st.get(colName) match {
-                  case Some(JObj(mm)) =>
-                    (mm.get("min").map(scalar).filter(_ != null),
-                     mm.get("max").map(scalar).filter(_ != null))
-                  case _ => (None, None)
-                }
+        else dirPartitions(f).map { case (pcol, parts) =>
+          parts.map { p =>
+            val pv = p.get(pcol).map(scalar).orNull
+            val (lo, hi) = p.get("stats") match {
+              case Some(JObj(st)) => st.get(colName) match {
+                case Some(JObj(mm)) =>
+                  (mm.get("min").map(scalar).filter(_ != null),
+                   mm.get("max").map(scalar).filter(_ != null))
                 case _ => (None, None)
               }
-              (pv, lo, hi)
-            })
-          case _ => None
+              case _ => (None, None)
+            }
+            (pv, lo, hi)
+          }
         }
+      case _ => None
+    }
+  }
+
+  /** A dir's partition column and its `partitions_added` entries, from
+    * its metadata fields; None when either is missing. */
+  private def dirPartitions(f: Map[String, graft.repair.JsonValue])
+      : Option[(String, Seq[collection.Map[String, graft.repair.JsonValue]])] = {
+    import graft.repair.{JArr, JObj, JStr}
+    (f.get("partition_col"), f.get("partitions_added")) match {
+      case (Some(JStr(c)), Some(JArr(ps))) => Some((c, ps.toSeq.collect { case JObj(p) => p }))
       case _ => None
     }
   }
@@ -484,6 +520,29 @@ object TableFormat {
         case _ => None
       })
       .nextOption()
+  }
+
+  /** The distinct partition values snapshot `version` holds, read from
+    * the manifests alone (no Spark job, no data IO): the
+    * `partitions_added` of every live data dir, minus that dir's
+    * `dir_excludes`. Values are manifest scalars (integral values as
+    * Long, null for the null partition). Fails loudly when a live dir has
+    * no partition metadata — every dir this seam writes has it, so a
+    * missing record means the table was damaged, and guessing would be
+    * worse. */
+  def partitionValues(table: String, version: Int): Set[Any] = {
+    def norm(v: Any): Any = v match {
+      case b: BigInt if b.isValidLong => b.toLong
+      case other => other
+    }
+    val excludes = dirExcludes(table, version)
+    dataDirs(table, version).flatMap { d =>
+      val (pcol, parts) = dirMetaFields(table, d).flatMap(dirPartitions).getOrElse(
+        throw new IllegalStateException(
+          s"dir $d of snapshot $version at $table has no partition metadata"))
+      val gone = excludes.getOrElse(d, Seq.empty).map(norm).toSet
+      parts.map(p => norm(p.get(pcol).map(jsonScalar).orNull)).filterNot(gone)
+    }.toSet
   }
 
   /** Column names recorded by snapshot `version`'s manifest (write-side

@@ -20,9 +20,23 @@ import graft.dsl.CheckSuite
   *     buckets without a manifest, and batch output dirs are keyed by the
   *     todo-set so a partial crash rewrites the same dir idempotently
   *     (exactly-once results without snapshot atomicity; the Iceberg
-  *     binding would replace this with snapshot commits — SURVEY.md §7.5);
-  *   - the input is explicitly range-partitioned on the key column before
-  *     the verdict aggregation (north rule: explicit partitioning).
+  *     binding would replace this with snapshot commits — SURVEY.md §7.5).
+  *
+  * A batch keeps four rules that bound its Spark tasks and jobs:
+  *
+  *   1. session-sized range shuffle: the input is explicitly
+  *      range-partitioned on the key column (north rule: explicit
+  *      partitioning) at the session's shuffle width, not at
+  *      `totalBuckets` — a fixed count pins the width at any data size and
+  *      AQE cannot coalesce it;
+  *   2. verdicts are evaluated once: the per-bucket verdict rows (at most
+  *      `totalBuckets`) are collected, and that same local result is both
+  *      written and manifested;
+  *   3. bucket-clustered writes: every `bucket=N` output dir is written by
+  *      one task, so it holds one file, not one per upstream task;
+  *   4. manifest-only snapshot sync: which buckets the snapshot table
+  *      already holds is read from its manifests
+  *      ([[graft.io.TableFormat.partitionValues]]), with no Spark job.
   *
   * This is the engine analogue of the reference's file-position resume
   * (`load()` from fd.tell(), json_repair.py:265-299): prior content
@@ -108,15 +122,16 @@ object Runner {
 
     // Full input feeds the compiler (dataset-level checks are global);
     // `scope` restricts what this batch reports. Explicit range partition
-    // on the key ahead of the key-shuffled operators (north rule).
-    // Persisted across the two jobs below (violations write + verdicts
-    // write): the input lineage may embed the expensive fused synth pass,
-    // which would otherwise run once per job. The frame is NARROW (metadata
-    // + audio measurements, no bytes), so at 10^12 rows this is a
-    // disk-spillable cache of the cheap columns, not the audio payload;
-    // released before returning.
+    // on the key ahead of the key-shuffled operators (rule 1: the width is
+    // the session's shuffle width, which AQE may coalesce). Persisted
+    // across the two jobs below (violations write + verdicts collect): the
+    // input lineage may embed the expensive fused synth pass, which would
+    // otherwise run once per job. The frame is NARROW (metadata + audio
+    // measurements, no bytes), so at 10^12 rows this is a disk-spillable
+    // cache of the cheap columns, not the audio payload; released before
+    // returning.
     val batchInput = scopedInput.map(f => f(todo)).getOrElse(df)
-    val repart = batchInput.repartitionByRange(totalBuckets, col(suite.keyColumn))
+    val repart = batchInput.repartitionByRange(col(suite.keyColumn))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // outputs are keyed PER BUCKET (dynamic partition overwrite): a retry
@@ -126,25 +141,29 @@ object Runner {
     // the Iceberg binding would replace this with snapshot commits.
     val batchId = todo.mkString("-").hashCode.toHexString
     val dyn = Map("partitionOverwriteMode" -> "dynamic")
-    // unpersist in finally: a throw from either write or the collect must
-    // not leak the cached narrow frame for the rest of the session
+    // unpersist in finally: a throw from the write or the collect must not
+    // leak the cached narrow frame for the rest of the session
     val results = try {
-      val violations =
-        CheckCompiler.violationsWithBucket(repart, suite, Some(todo), globalInput)
-      violations.write.mode("overwrite").options(dyn)
+      // rule 3: one task per bucket value, so one file per bucket dir
+      CheckCompiler.violationsWithBucket(repart, suite, Some(todo), globalInput)
+        .repartition(col("bucket"))
+        .write.mode("overwrite").options(dyn)
         .partitionBy("bucket").parquet(s"$outDir/violations")
 
-      val verdicts = CheckCompiler.verdicts(repart, suite, Some(todo), globalInput)
-      verdicts.write.mode("overwrite").options(dyn)
+      // rule 2: one evaluation; the collected rows are written from a local
+      // frame with the plan's own schema (one task, one file per bucket)
+      val verdictPlan = CheckCompiler.verdicts(repart, suite, Some(todo), globalInput)
+      val rows = verdictPlan.collect()
+      spark.createDataFrame(rows.toSeq.asJava, verdictPlan.schema).coalesce(1)
+        .write.mode("overwrite").options(dyn)
         .partitionBy("bucket").parquet(s"$outDir/verdicts")
 
       // durable results exist for every bucket in this batch -> commit ONE
       // atomic manifest for the whole batch (temp + rename). All-or-nothing:
       // a crash mid-write leaves the batch unmanifested, so the retry reuses
       // the same todo set / batchId and overwrites the same output dirs.
-      verdicts.collect().map(r =>
-        BucketResult(r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-    } finally repart.unpersist(false) // 2 writes + collect done (or failed)
+      rows.map(r => BucketResult(r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+    } finally repart.unpersist(false) // write + collect done (or failed)
     val wallMs = (System.nanoTime() - t0) / 1000000
     val byBucket = results.map(r => r.bucket -> r).toMap
     val entries = todo.map { b =>
@@ -167,17 +186,17 @@ object Runner {
   /** Bring the verdict snapshot table up to date with the manifest: append
     * one snapshot holding every manifested bucket the table doesn't have
     * yet (no-op when in sync). Crash-safe in both directions — the
-    * manifest leads, and appends are keyed on the missing-bucket set. */
+    * manifest leads, and appends are keyed on the missing-bucket set. The
+    * table's buckets come from its snapshot manifests (rule 4): no Spark
+    * job, whatever the table's size. */
   def syncSnapshot(spark: SparkSession, outDir: String, table: String): Unit = {
     import spark.implicits._
     val manifested = manifestResults(outDir)
     if (manifested.isEmpty) return
-    val inSnapshot: Set[Long] =
-      if (graft.io.TableFormat.currentVersion(table).isEmpty) Set.empty
-      else graft.io.TableFormat.read(spark, table)
-        .select(col("bucket").cast("long")) // partition col is discovered as int
-        .distinct().collect().map(_.getLong(0)).toSet
-    val missing = manifested.keySet.diff(inSnapshot).toSeq.sorted
+    val inSnapshot: Set[Any] = graft.io.TableFormat.currentVersion(table)
+      .map(v => graft.io.TableFormat.partitionValues(table, v))
+      .getOrElse(Set.empty)
+    val missing = manifested.keySet.filterNot(inSnapshot).toSeq.sorted
     if (missing.nonEmpty) {
       val batchDf = missing.map { b =>
         val r = manifested(b)

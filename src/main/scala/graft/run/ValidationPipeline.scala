@@ -37,17 +37,20 @@ object ValidationPipeline {
   }
 
   /** Total row count of a parquet file/dir straight from the footers —
-    * driver-side metadata IO only. None when any footer is unreadable. */
-  private def parquetRowCount(pathStr: String): Option[Long] =
+    * driver-side metadata IO only. None when any footer is unreadable, and
+    * None for a nested layout (any subdirectory, e.g. partition dirs):
+    * only the top level is summed, so a nested count would be partial —
+    * such layouts take the exact count() path instead. */
+  private[graft] def parquetRowCount(pathStr: String): Option[Long] =
     try {
       import scala.jdk.CollectionConverters._
       val p = java.nio.file.Paths.get(pathStr)
-      val files: Seq[java.nio.file.Path] =
+      val entries: Seq[java.nio.file.Path] =
         if (java.nio.file.Files.isDirectory(p))
-          scala.util.Using.resource(java.nio.file.Files.list(p))(
-            _.iterator().asScala
-              .filter(f => f.getFileName.toString.endsWith(".parquet")).toSeq)
+          scala.util.Using.resource(java.nio.file.Files.list(p))(_.iterator().asScala.toSeq)
         else Seq(p)
+      if (entries.exists(java.nio.file.Files.isDirectory(_))) return None
+      val files = entries.filter(_.getFileName.toString.endsWith(".parquet"))
       if (files.isEmpty) return None
       val conf = new org.apache.hadoop.conf.Configuration()
       Some(files.map { f =>

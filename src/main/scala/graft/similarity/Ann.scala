@@ -29,13 +29,18 @@ object Ann {
     * cost ~128 interpreted lambda invocations in the pair-scoring hot
     * path. The UDF folds left over the same element order with the same
     * `acc + x(i)*y(i)` double arithmetic, so results are bit-identical
-    * (the ann and dd_embed oracles hash-match on exactly this). */
-  private val dotUdf = udf((a: Seq[Double], b: Seq[Double]) => {
-    val n = math.min(a.length, b.length)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += a(i) * b(i); i += 1 }
-    acc
+    * (the ann and dd_embed oracles hash-match on exactly this). A null
+    * array or arrays of different lengths give NULL, as `zip_with` did
+    * (it padded the shorter side with nulls, which poisoned the sum). */
+  private[graft] val dotUdf = udf((a: Seq[Double], b: Seq[Double]) => {
+    if (a == null || b == null || a.length != b.length) null
+    else {
+      val n = a.length
+      var acc = 0.0
+      var i = 0
+      while (i < n) { acc += a(i) * b(i); i += 1 }
+      java.lang.Double.valueOf(acc)
+    }
   })
 
   private def dot(a: Column, b: Column): Column = dotUdf(a, b)

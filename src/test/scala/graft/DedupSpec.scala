@@ -422,4 +422,19 @@ class DedupSpec extends AnyFunSuite {
       assert(got(r.getLong(0)) == TextFingerprint.fingerprint(r.getString(1)))
     }
   }
+
+  test("dot product UDF: null or ragged arrays give NULL, equal lengths keep the sequential sum") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val df = Seq[(Option[Seq[Double]], Option[Seq[Double]])](
+      (Some(Seq(0.1, 0.2, 0.3)), Some(Seq(0.7, -1.1, 2.5))),
+      (None, Some(Seq(1.0, 2.0))),
+      (Some(Seq(1.0, 2.0)), None),
+      (Some(Seq(1.0, 2.0, 3.0)), Some(Seq(1.0, 2.0))),
+      (Some(Seq.empty), Some(Seq.empty))
+    ).toDF("a", "b")
+    val got = df.select(Ann.dotUdf(col("a"), col("b"))).collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    assert(got == Seq(Some(0.1 * 0.7 + 0.2 * -1.1 + 0.3 * 2.5), None, None, None, Some(0.0)))
+  }
 }

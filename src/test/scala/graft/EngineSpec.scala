@@ -317,4 +317,19 @@ class EngineSpec extends AnyFunSuite {
     assert(captured.toLowerCase.contains("jsonrepair"),
       s"noop write pruned the projection — bench numbers would be vacuous:\n$captured")
   }
+
+  test("parquetRowCount: exact on a flat dir, None on a nested layout") {
+    import java.nio.file.{Files, Paths}
+    val flat = Files.createTempDirectory("graft-rowcount-flat").toString
+    spark.range(0, 300).repartition(3).write.mode("overwrite").parquet(flat)
+    assert(graft.run.ValidationPipeline.parquetRowCount(flat) == Some(300L))
+
+    // top-level files PLUS a subdirectory of more files: summing only the
+    // top level would return a partial count
+    val nested = Files.createTempDirectory("graft-rowcount-nested").toString
+    spark.range(0, 100).coalesce(1).write.mode("overwrite").parquet(nested)
+    spark.range(0, 50).coalesce(1).write.mode("overwrite")
+      .parquet(Paths.get(nested, "part=1").toString)
+    assert(graft.run.ValidationPipeline.parquetRowCount(nested).isEmpty)
+  }
 }

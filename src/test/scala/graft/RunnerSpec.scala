@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -163,5 +165,55 @@ class RunnerSpec extends AnyFunSuite {
     val oneShot = ClipQueries.verdicts(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
     assert(verdicts.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet == oneShot)
+  }
+
+  test("one batch leaves at most one parquet file per violations and verdicts bucket dir") {
+    val out = Files.createTempDirectory("graft-runner-files").toString
+    val clips = ClipsTable.base(spark, sfDir)
+    Runner.run(spark, clips, ClipQueries.suite(spark, sfDir), out, maxBuckets = 10)
+    def list(p: java.nio.file.Path) =
+      scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toList)
+    Seq("violations" -> 1, "verdicts" -> 10).foreach { case (sub, minDirs) =>
+      val dirs = list(java.nio.file.Paths.get(out, sub))
+        .filter(_.getFileName.toString.startsWith("bucket="))
+      assert(dirs.size >= minDirs, s"$sub: ${dirs.size} bucket dirs")
+      dirs.foreach { d =>
+        val files = list(d).count(_.getFileName.toString.endsWith(".parquet"))
+        assert(files <= 1, s"$d holds $files parquet files")
+      }
+    }
+  }
+
+  test("retry of an unmanifested batch the snapshot already holds adds no rows and no version") {
+    import graft.io.TableFormat
+    val out = Files.createTempDirectory("graft-runner-resync").toString
+    val table = Files.createTempDirectory("graft-verdict-resync").toString
+    val clips = ClipsTable.base(spark, sfDir)
+    val suite = ClipQueries.suite(spark, sfDir)
+
+    // two batches, both synced into the snapshot; then the second batch's
+    // manifest is lost, which leaves the snapshot AHEAD of the manifest
+    Runner.run(spark, clips, suite, out, maxBuckets = 10, snapshotTable = Some(table))
+    Runner.run(spark, clips, suite, out, maxBuckets = 10, snapshotTable = Some(table))
+    val vBefore = TableFormat.currentVersion(table)
+    assert(vBefore.contains(2))
+    val victim = scala.util.Using.resource(
+        Files.list(java.nio.file.Paths.get(out, "_manifest"))) { s =>
+      s.iterator().asScala.find(p =>
+        p.getFileName.toString.startsWith("batch-") &&
+          Files.readString(p).contains("\"bucket\": 10")).get
+    }
+    Files.delete(victim)
+    assert(Runner.completedBuckets(out).size == 10)
+
+    // the retry recomputes the same ten buckets; both syncs find them in
+    // the snapshot already
+    val r = Runner.run(spark, clips, suite, out, maxBuckets = 10, snapshotTable = Some(table))
+    assert(r.processed.map(_.bucket) == (10L until 20L))
+    assert(Runner.completedBuckets(out).size == 20)
+    assert(TableFormat.currentVersion(table) == vBefore)
+    val buckets = TableFormat.read(spark, table).collect()
+      .map(_.getAs[Number]("bucket").longValue())
+    assert(buckets.length == 20 && buckets.toSet == (0L until 20L).toSet)
   }
 }

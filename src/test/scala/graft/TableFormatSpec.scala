@@ -394,4 +394,56 @@ class TableFormatSpec extends AnyFunSuite {
     assert(out.count() == 0)
     assert(out.columns.toSeq == TableFormat.read(spark, table).columns.toSeq)
   }
+
+  test("footer-read timeout falls back to the scan path with the same manifest counts and bounds") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val df = ClipsTable.base(spark, sfDir).select("clip_id", "ord", "bucket")
+    val statsCols = Seq("clip_id", "ord")
+    val footer = Files.createTempDirectory("graft-table-footer").toString
+    val scanned = Files.createTempDirectory("graft-table-scanned").toString
+
+    // jobs per job group; the scan fallback adds jobs the footer path
+    // does not run (schema inference + the aggregation)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    def inGroup[T](g: String)(body: => T): T = {
+      spark.sparkContext.setJobGroup(g, g)
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      inGroup("footer")(TableFormat.commit(df, footer, "bucket", statsCols))
+      inGroup("scan") {
+        TableFormat.withFooterTimeout(scala.concurrent.duration.Duration.Zero) {
+          TableFormat.commit(df, scanned, "bucket", statsCols)
+        }
+      }
+      // the bus delivers events in order: once the sentinel's start has
+      // arrived, every earlier job's has too
+      inGroup("sentinel")(spark.sparkContext.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.containsKey("sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.containsKey("sentinel"))
+    def n(g: String): Int = Option(jobs.get(g)).map(_.intValue).getOrElse(0)
+    assert(n("scan") > n("footer"),
+      s"the zero wait did not take the scan path: ${n("scan")} vs ${n("footer")} jobs")
+
+    def entries(table: String): Set[String] =
+      graft.repair.PyJson.loads(Files.readString(
+          java.nio.file.Paths.get(table, "metadata", "dir-v1.json"))) match {
+        case Some(graft.repair.JObj(f)) => f("partitions_added") match {
+          case graft.repair.JArr(ps) => ps.map(graft.repair.PyJson.dumps(_)).toSet
+          case other => fail(s"partitions_added is $other")
+        }
+        case other => fail(s"unreadable dir metadata: $other")
+      }
+    assert(entries(footer).size == 32)
+    assert(entries(scanned) == entries(footer))
+    assert(TableFormat.read(spark, scanned).count() == 1500)
+  }
 }

@@ -145,6 +145,11 @@ class TableLifecycleModelSpec extends AnyFunSuite {
       assert(got == model,
         s"op $ops ($op): table/model divergence — " +
           s"extra=${(got -- model).take(3)} missing=${(model -- got).take(3)}")
+      // the manifest-only partition listing equals the distinct partition
+      // values the read returned
+      val parts = TableFormat.partitionValues(table, TableFormat.currentVersion(table).get)
+      assert(parts == got.map(_.grp.toLong),
+        s"op $ops ($op): partitionValues $parts vs read ${got.map(_.grp)}")
       // stats-pruned range read composed with whatever just happened
       // (overwrite exclusions, rollback, expiry, evolution): readWhere must
       // equal the model filtered by the same closed range, every time
@@ -161,6 +166,8 @@ class TableLifecycleModelSpec extends AnyFunSuite {
     history.foreach { case (v, expected) =>
       assert(collectTable(TableFormat.read(spark, table, Some(v))) == expected,
         s"time travel to v$v diverged")
+      assert(TableFormat.partitionValues(table, v) == expected.map(_.grp.toLong),
+        s"partitionValues of v$v diverged")
     }
     assert(history.size >= 2, "expiry removed too much history to be a meaningful check")
   }
